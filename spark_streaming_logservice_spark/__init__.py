@@ -19,8 +19,16 @@ Layout:
                  (dedup, similarity, text analysis, multimodal)
     streaming/ — watermarked window aggs, stream-stream joins, rate limiting
     compat/    — thin factories mirroring the reference's public API names
+    worker_zipcache — stops Spark Python workers re-parsing pyspark.zip on
+                 every task (CPython < 3.12 only)
 """
 
 __version__ = "0.1.0"
 
-from spark_streaming_logservice_spark.session import get_spark  # noqa: F401
+from spark_streaming_logservice_spark import worker_zipcache
+
+# Every Spark Python worker that unpickles package code imports this package
+# first, so this is where the per-task zip re-scan fix reaches them.
+worker_zipcache.install()
+
+from spark_streaming_logservice_spark.session import get_spark  # noqa: E402,F401

@@ -484,12 +484,16 @@ class LogstoreBatchWriter(DataSourceArrowWriter):
     Overwrite is rejected like the reference's CreatableRelationProvider
     (SQL/LoghubSourceProvider.scala:147-176 allows Append/ErrorIfExists only).
 
-    Arrow path (r2): tasks receive ``pyarrow.RecordBatch``es — flattening to
-    wire strings runs as Arrow casts, and the contents map assembles from
-    numpy offset arithmetic; rows never materialize as Spark Row objects.
-    The one scalar loop kept on purpose is float/decimal formatting: the wire
-    format is Python/Java ``repr`` (``"3.0"``), where Arrow's cast prints
-    ``"3"`` — format parity beats the last drop of vectorization there.
+    Arrow path: tasks receive ``pyarrow.RecordBatch``es and rows never
+    materialize as Python objects. Flattening to wire strings runs as Arrow
+    casts. Routing dictionary-encodes the hash-key column and hashes each
+    distinct key once per ``write`` call (``stable_shard``; a null key
+    routes as ``"None"``). Each shard's contents map is one Arrow ``take``
+    over the concatenated wire columns, indexed row-major by a numpy
+    validity grid, so a row's entries keep field order and omit its null
+    values. Two per-value Python loops remain on purpose: the
+    per-distinct-key md5, and float/decimal formatting, whose wire format is
+    Python/Java ``repr`` (``"3.0"``) where Arrow's cast prints ``"3"``.
 
     Two-phase write: tasks stage parquet under ``_staging/<write_id>/``;
     driver-side commit() atomically renames exactly the staged files named in
@@ -574,7 +578,9 @@ class LogstoreBatchWriter(DataSourceArrowWriter):
         salt = int.from_bytes(salt_src[:2], "big") & 0x7FF
         low21 = ((pid & 0x3FF) << 11) | salt
         fields = self.schema.fields
-        names = np.array([f.name for f in fields], dtype=object)
+        names = pa.array([f.name for f in fields], pa.string())
+        field_ids = np.arange(len(fields), dtype="int64")
+        routes: dict = {}  # hash key -> shard, for the keys of this call
         staged: list[str] = []
         total = 0
         for batch in iterator:
@@ -599,47 +605,48 @@ class LogstoreBatchWriter(DataSourceArrowWriter):
                 )
             else:
                 times = np.full(n, int(_time.time()), dtype="int64")
-            # shard routing
+            # shard routing: hash each distinct key once per call (a null key
+            # is its own dictionary entry and routes as str(None) == "None")
             if self.hash_col is not None:
-                keys = pc.cast(batch.column(self.hash_col), pa.string()).to_pylist()
-                shards = np.fromiter(
-                    (stable_shard(str(k), self.n_shards) for k in keys),
-                    dtype="int64",
-                    count=n,
+                enc = pc.dictionary_encode(
+                    pc.cast(batch.column(self.hash_col), pa.string()),
+                    null_encoding="encode",
                 )
+                entry_shards = np.array(
+                    [
+                        routes[k] if k in routes
+                        else routes.setdefault(k, stable_shard(str(k), self.n_shards))
+                        for k in enc.dictionary.to_numpy(zero_copy_only=False)
+                    ],
+                    dtype="int64",
+                )
+                shards = entry_shards[enc.indices.to_numpy(zero_copy_only=False)]
             else:
                 shards = np.full(n, pid % self.n_shards, dtype="int64")
             seqs = (
                 (_seq_range(n) + np.arange(n, dtype="int64")) << 21
             ) | low21
-            # contents map assembly: row-major flatten of the (n, k) value
-            # grid, masked by validity — vectorized offsets, no per-row dicts
+            # contents map assembly: cell (row i, field j) sits at j*n + i of
+            # the concatenated wire columns; a shard's map entries are its
+            # rows' valid cells in row-major order, gathered with one take
+            values = pa.concat_arrays(
+                [c if c.type == pa.string() else c.cast(pa.string()) for c in cols]
+            )
             valid = np.stack(
                 [pc.is_valid(c).to_numpy(zero_copy_only=False) for c in cols], axis=1
             )
-            vals = np.stack(
-                [c.to_numpy(zero_copy_only=False) for c in cols], axis=1
-            )
-            flat_mask = valid.reshape(-1)
-            flat_keys = np.tile(names, n)[flat_mask]
-            flat_vals = vals.reshape(-1)[flat_mask]
-            counts = valid.sum(axis=1)
-            offsets = np.zeros(n + 1, dtype="int32")
-            np.cumsum(counts, out=offsets[1:])
+            cell_base = field_ids * n
             for shard in np.unique(shards):
-                m = shards == shard
-                idx = np.nonzero(m)[0]
-                # rebuild per-shard map offsets from the global ones
-                sh_counts = counts[idx]
+                idx = np.nonzero(shards == shard)[0]
+                mask = valid[idx]
+                cells = (cell_base[None, :] + idx[:, None])[mask]
+                key_ids = np.broadcast_to(field_ids, mask.shape)[mask]
                 sh_off = np.zeros(len(idx) + 1, dtype="int32")
-                np.cumsum(sh_counts, out=sh_off[1:])
-                take = np.concatenate(
-                    [np.arange(offsets[i], offsets[i + 1]) for i in idx]
-                ) if len(idx) else np.array([], dtype="int64")
+                np.cumsum(mask.sum(axis=1), out=sh_off[1:])
                 contents = pa.MapArray.from_arrays(
                     pa.array(sh_off, pa.int32()),
-                    pa.array(flat_keys[take], pa.string()),
-                    pa.array(flat_vals[take], pa.string()),
+                    names.take(pa.array(key_ids)),
+                    values.take(pa.array(cells)),
                 )
                 empty_tags = pa.MapArray.from_arrays(
                     pa.array(np.zeros(len(idx) + 1, dtype="int32"), pa.int32()),
@@ -650,8 +657,8 @@ class LogstoreBatchWriter(DataSourceArrowWriter):
                     {
                         "seq": pa.array(seqs[idx], pa.int64()),
                         "time": pa.array(times[idx], pa.int64()),
-                        "topic": pa.array([self.topic] * len(idx), pa.string()),
-                        "source": pa.array([self.source] * len(idx), pa.string()),
+                        "topic": pa.repeat(pa.scalar(self.topic, pa.string()), len(idx)),
+                        "source": pa.repeat(pa.scalar(self.source, pa.string()), len(idx)),
                         "contents": contents,
                         "tags": empty_tags,
                     },

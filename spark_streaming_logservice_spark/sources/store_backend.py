@@ -137,8 +137,12 @@ def _seq_time_index(path: str, shard: int):
     """(seqs, times) sorted by seq for the whole shard, or None when the
     shard exceeds ``_SEQ_TIME_CACHE_MAX_ROWS`` (callers fall back to the
     footer-bounded scans). Signature-keyed like ``_row_group_stats2``."""
+    key = (os.path.abspath(path), shard)
     groups = _row_group_stats2(path, shard)
     if not groups or sum(g[4] for g in groups) > _SEQ_TIME_CACHE_MAX_ROWS:
+        # a shard that grew past the cap (or vanished) must not keep its
+        # last index pinned in driver memory
+        _SEQ_TIME_CACHE.pop(key, None)
         return None
     d = shard_dir(path, shard)
     try:
@@ -147,7 +151,6 @@ def _seq_time_index(path: str, shard: int):
     except FileNotFoundError:
         return None
     sig = (mtime, len(names))
-    key = (os.path.abspath(path), shard)
     hit = _SEQ_TIME_CACHE.get(key)
     if hit is not None and hit[0] == sig:
         return hit[1], hit[2]

@@ -277,6 +277,38 @@ def test_bounded_cursor_lookups_match_full_scan(tmp_path):
         assert be.time_for_seq(path, 0, s_probe) == want, s_probe
 
 
+def test_seq_time_index_evicted_when_shard_outgrows_cap(tmp_path, monkeypatch):
+    """A shard that grows past the index cap must drop its cached (seq,
+    time) arrays, not keep them pinned while the lookups fall back to the
+    footer-bounded scans — which must still answer exactly."""
+    from spark_streaming_logservice_spark.sources import store_backend as be
+
+    monkeypatch.setattr(be, "_SEQ_TIME_CACHE_MAX_ROWS", 30)
+    path = str(tmp_path / "p" / "cap-store")
+    key = (os.path.abspath(path), 0)
+    base = 1_700_000_000
+
+    def append(i):
+        be.append_rows(
+            path, 0,
+            [{"time": base + i * 10 + j, "topic": "t", "source": "s",
+              "contents": {"m": f"{i}-{j}"}, "tags": {}} for j in range(10)],
+        )
+
+    append(0)
+    append(1)
+    first = be.shard_bounds(path, 0)[0]
+    assert be.time_for_seq(path, 0, first) == base
+    assert key in be._SEQ_TIME_CACHE
+    append(2)
+    append(3)  # 40 rows > cap
+    assert be.time_for_seq(path, 0, first + 25) == base + 25
+    assert key not in be._SEQ_TIME_CACHE
+    assert be.nth_seq(path, 0, first, 35) == first + 35
+    assert be.second_histogram(path, 0, first + 38) == [(base + 38, 1), (base + 39, 1)]
+    assert key not in be._SEQ_TIME_CACHE
+
+
 def test_rate_walk_not_stalled_by_backfill_behind_cursor(tmp_path):
     """Out-of-order backfill (old event times at high seqs) must not pin the
     end boundary behind the cursor: seq_for_time's min_seq clamp guarantees
